@@ -458,6 +458,34 @@ SQL_PYRAMID_UPDATE = _pyr_sql(
 _ZB = (12288.0, 28672.0, 20480.0, 36864.0)  # (x0, x1, y0, y1): 1/16 area
 
 
+def _staging_dir(kind: str, sf_dir: str) -> str:
+    """Empty ``<tmp>/egp_<kind>_<tag>_<pid>`` for this process's table.
+    The query returns a lazy read, so its own dir must outlive the call;
+    instead, same-tag dirs left by processes that have exited are
+    removed here, which bounds the build-up to one dir per live process."""
+    import glob
+    import hashlib
+    import os
+    import shutil
+    import tempfile
+
+    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
+    prefix = f"{tempfile.gettempdir()}/egp_{kind}_{tag}_"
+    for old in glob.glob(prefix + "*"):
+        pid = old[len(prefix):]
+        if not pid.isdigit() or int(pid) == os.getpid():
+            continue
+        try:
+            os.kill(int(pid), 0)
+        except ProcessLookupError:
+            shutil.rmtree(old, ignore_errors=True)
+        except PermissionError:  # alive, owned by another user
+            pass
+    path = f"{prefix}{os.getpid()}"
+    shutil.rmtree(path, ignore_errors=True)
+    return path
+
+
 def q_zorder_pruned_read(spark, sf_dir):
     """Z-order clustered snaplog write + manifest-pruned bbox read
     (operators/cluster.py): events-derived points are written in Morton
@@ -465,25 +493,16 @@ def q_zorder_pruned_read(spark, sf_dir):
     and the asserts prove the layout made the stats selective — the
     returned rows must still be EXACTLY the full filter, which the
     oracle computes straight from events."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
+    from .functions.georef import key_x, key_y
     from .operators.cluster import skipping_report, zorder_cluster
     from .sources.snaplog import SnapshotLogTable
-
-    from .functions.georef import key_x, key_y
 
     ev = _t(spark, sf_dir, "events").select(
         "event_id",
         key_x(F.col("event_id")).alias("x"),
         key_y(F.col("event_id")).alias("y"),
     )
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    path = f"{tempfile.gettempdir()}/egp_zorder_{tag}_{os.getpid()}"
-    shutil.rmtree(path, ignore_errors=True)
-    t = SnapshotLogTable(spark, path)
+    t = SnapshotLogTable(spark, _staging_dir("zorder", sf_dir))
     t.overwrite(zorder_cluster(ev, "x", "y", num_files=16))
     x0, x1, y0, y1 = _ZB
     where = [("x", ">=", x0), ("x", "<=", x1),
@@ -512,11 +531,6 @@ def q_rewrite_compact(spark, sf_dir):
     where the scattered one couldn't and that time travel still sees
     the pre-rewrite files; the returned (pruned) read must equal the
     oracle's direct filter."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from .functions.georef import key_x, key_y
     from .operators.cluster import skipping_report
     from .sources.snaplog import SnapshotLogTable
@@ -526,9 +540,7 @@ def q_rewrite_compact(spark, sf_dir):
         key_x(F.col("event_id")).alias("x"),
         key_y(F.col("event_id")).alias("y"),
     )
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    path = f"{tempfile.gettempdir()}/egp_rewrite_{tag}_{os.getpid()}"
-    shutil.rmtree(path, ignore_errors=True)
+    path = _staging_dir("rewrite", sf_dir)
     t0 = SnapshotLogTable(spark, path)
     v1 = t0.overwrite(ev.repartition(16, "event_id"))
     where = [("x", "<", 16384.0)]

@@ -21,8 +21,10 @@ for use inside pandas-UDF refinement kernels. One algorithm, three
 renderers — keep them in sync.
 
 H3/S2 BACKEND SEAM — every operator reaches cell geometry ONLY through
-this module's API (tests/test_cells_conformance.py is the contract any
-backend must pass). To swap in real H3 on a cluster with the lib:
+this module's API. tests/test_cells_conformance.py tests this Morton
+backend; its point-API axioms, which the native S2 backend in
+cells_s2.py also passes, are the contract a replacement backend would
+have to pass. To swap in real H3 on a cluster with the lib:
 
   cell_of_xy(x, y, res)   → h3.latlng_to_cell (inside a pandas UDF batch)
   parent_cell(c, r, pr)   → h3.cell_to_parent

@@ -1,13 +1,12 @@
 """Dependency-free S2 spherical cell backend (VERDICT r6 #2).
 
-BASELINE.json's north rule names H3/S2 geodesic cells; the h3 library is
-absent in this sandbox, so the real-H3 twin (cells_h3.py) stays import-
-gated. This module closes the gap for real: S2 cell ids implemented
-natively from the PUBLISHED algorithm (s2geometry's documented cell-id
-scheme — cube-face projection, quadratic ST transform, Hilbert-curve
-position, trailing-bit level marker) as vectorized numpy kernels. No
-external library, importable everywhere, and therefore the GEODESIC
-DEFAULT when ``h3`` is missing (``functions.geodesic_backend()``).
+S2 cell ids implemented natively from the PUBLISHED algorithm
+(s2geometry's documented cell-id scheme — cube-face projection,
+quadratic ST transform, Hilbert-curve position, trailing-bit level
+marker) as vectorized numpy kernels. No external library; importable
+everywhere. No operator uses it — the engine works in one planar CRS on
+the Morton cells of cells.py — so it is an explicit opt-in for work that
+needs true spherical cells.
 
 Layout of a cell id (uint64, stored as int64 bigint — faces 4-5 set the
 sign bit, which is fine for the equi-joins and range containment the
@@ -20,8 +19,8 @@ cells (level 30) end in 1. Parent/child/range arithmetic is pure bit
 math on the id, exactly as published.
 
 Backend surface = the cells.py seam contract (cell_of_xy / parent_cell /
-kring_of_xy / res_for_radius / cell_size / MAX_RES), with the same
-planar-patch mapping as cells_h3: [0, EXTENT)^2 is a ~0.5-degree
+kring_of_xy / res_for_radius / cell_size / MAX_RES), with a planar-patch
+mapping: [0, EXTENT)^2 is a ~0.5-degree
 equirectangular patch centered at EGP_S2_PATCH (default equator). Encode
 is one fully-vectorized numpy pass per Arrow batch — no per-row Python,
 unlike a library-backed backend.
@@ -30,7 +29,7 @@ The coverage bound (res_for_radius) uses S2's published minimum-width
 metric for the quadratic projection: min cell width at level l is
 ``(2*sqrt(2)/3) * 2^-l`` radians — a true global lower bound over the
 whole sphere, so the k-ring(1) coverage proof needs no per-patch width
-measurement at all (tighter than cells_h3's sampled bound).
+measurement at all.
 
 Correctness evidence (tests/test_cells_s2.py): Hilbert-curve continuity
 (consecutive leaf ids are 4-neighbours in (face,i,j) — any lookup-table
@@ -273,7 +272,7 @@ _RAD_PER_UNIT = _SPAN_DEG * math.pi / 180.0 / EXTENT
 
 def set_patch(lat0: float, lng0: float) -> None:
     """Re-center the mapped patch. Driver-side effect only — worker
-    processes read EGP_S2_PATCH at import (same rule as cells_h3)."""
+    processes read EGP_S2_PATCH at import."""
     global PATCH_LAT0, PATCH_LNG0
     PATCH_LAT0, PATCH_LNG0 = float(lat0), float(lng0)
 

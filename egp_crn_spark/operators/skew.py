@@ -57,11 +57,3 @@ def salted_aggregate(
     )
     return partial.groupBy(key).agg(*[c.alias(n) for n, c in merge.items()])
 
-
-def repartition_hot_aware(df: DataFrame, key: str, threshold: int,
-                          n_salt: int = 16) -> DataFrame:
-    """Repartition on (key, salt) so hot keys spread over n_salt
-    partitions while cold keys stay co-located on their key."""
-    hot = hot_keys(df, key, threshold)
-    salted = with_salt(df, key, hot, n_salt)
-    return salted.repartition(F.col(key), F.col("_salt"))

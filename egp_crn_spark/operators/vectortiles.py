@@ -78,6 +78,18 @@ def vector_tiles(arcs: DataFrame, res: int,
             valid = varr.is_valid().to_numpy(zero_copy_only=False)
             outer_off, inner = _list_view(varr)
             inner_off, coords_arr = _list_view(inner)
+            # every vertex of a non-null arc needs >= 2 doubles: a
+            # shorter list would read the next vertex's x as its y
+            short = np.flatnonzero(inner_off[1:] - inner_off[:-1] < 2)
+            if short.size:
+                arc_of = np.searchsorted(outer_off, short, side="right") - 1
+                inside = (arc_of >= 0) & (arc_of < n_arcs)
+                inside[inside] &= valid[arc_of[inside]]
+                if inside.any():
+                    bad = int(arc_of[inside][0])
+                    raise ValueError(
+                        f"arc {ids_col[bad].as_py()!r} has a vertex with "
+                        "fewer than 2 coordinates")
             coords = coords_arr.to_numpy(zero_copy_only=False)
             # vertex j -> (x, y) = first two doubles of its inner list
             vx = coords[inner_off[:-1]]

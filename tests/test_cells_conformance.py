@@ -1,8 +1,10 @@
 """Cell-backend conformance contract (functions/cells.py docstring).
 
-Any cell backend (the Morton default, or an h3-backed twin on a real
-cluster) must pass these axioms — every spatial operator's correctness
-proof relies on them, not on square-cell geometry specifically.
+Every spatial operator's correctness proof relies on these axioms, not
+on square-cell geometry specifically. They run against the Morton
+backend in functions/cells.py; the point-API axioms also run against the
+native S2 backend in functions/cells_s2.py, and are the contract any
+replacement backend such as H3 would have to pass.
 """
 
 from __future__ import annotations
@@ -15,57 +17,28 @@ from pyspark.sql import functions as F
 
 from egp_crn_spark.config import EXTENT
 from egp_crn_spark.functions import cells as morton_cells
-from egp_crn_spark.functions import cells_rowmajor
+from egp_crn_spark.functions import cells_s2
 
 
-try:
-    from egp_crn_spark.functions import cells_h3  # noqa: F401
-
-    _HAS_H3 = True
-except ImportError:
-    _HAS_H3 = False
-
-_H3_PARAM = pytest.param(
-    "h3",
-    marks=pytest.mark.skipif(
-        not _HAS_H3, reason="h3 library not installed in this environment"
-    ),
-)
+_BACKENDS = {"morton": morton_cells, "s2": cells_s2}
 
 
-def _backend(name):
-    if name == "morton":
-        return morton_cells
-    if name == "rowmajor":
-        return cells_rowmajor
-    if name == "s2":
-        from egp_crn_spark.functions import cells_s2 as b
-
-        return b
-    from egp_crn_spark.functions import cells_h3 as b
-
-    return b
-
-
-@pytest.fixture(scope="module", params=["morton", "rowmajor"])
+@pytest.fixture(scope="module", params=["morton"])
 def C(request):
-    """Square-grid backends: these tests exercise the ix/iy internals
-    (cell_encode, idx_of, domain clamping, the three renderers) that an
-    h3 backend deliberately does not have. The row-major module exists
-    precisely to prove the operators' contract does not depend on
-    Z-order bit structure (h3 swap-readiness)."""
-    return _backend(request.param)
+    """Square-grid backend: these tests exercise the ix/iy internals
+    (cell_encode, idx_of, domain clamping, the three renderers) that a
+    spherical backend deliberately does not have."""
+    return _BACKENDS[request.param]
 
 
-@pytest.fixture(scope="module", params=["morton", "rowmajor", "s2", _H3_PARAM])
+@pytest.fixture(scope="module", params=["morton", "s2"])
 def CB(request):
-    """ALL backends, including the native S2 geodesic backend (always
-    available — pure numpy) and real h3 when the library is importable
-    (skipped, not failed, where it is not): the backend-agnostic axioms
-    below reach cells only through the point API — cell_of_xy,
-    parent_cell, kring_of_xy, res_for_radius, cell_size — which is the
-    exact surface the operators use through the cells.py seam."""
-    return _backend(request.param)
+    """All backends, including the native S2 geodesic backend (pure
+    numpy): the backend-agnostic axioms below reach cells only through
+    the point API — cell_of_xy, parent_cell, kring_of_xy,
+    res_for_radius, cell_size — which is the exact surface the
+    operators use through the cells.py seam."""
+    return _BACKENDS[request.param]
 
 
 @pytest.fixture(scope="module")
@@ -162,48 +135,6 @@ def test_res_for_radius_covers(spark, CB):
         )
     ).count()
     assert missed == 0
-
-
-@pytest.mark.skipif(not _HAS_H3, reason="h3 library not installed in this environment")
-@pytest.mark.parametrize("patch", [(0.0, 0.0), (45.5, -73.6)],
-                         ids=["equator", "midlat"])
-@pytest.mark.parametrize("res", [7, 8, 9, 10])
-def test_h3_measured_width_covers_res7_to_10(res, patch):
-    """VERDICT r5 #8: the measured-min-width bound, asserted per res
-    (7-10) and per patch location (equatorial + mid-latitude, where
-    icosahedron distortion and longitude shrink differ). Driver-side
-    geometry only — pure h3 calls through the module's patch mapping:
-    400 random point pairs within radius = cell_size(res) must share a
-    (cell, grid-disk-1) overlap at res, and the measured bound must stay
-    below the analytic average width (sanity: margin direction)."""
-    from egp_crn_spark.functions import cells_h3 as H
-
-    old = (H.PATCH_LAT0, H.PATCH_LNG0)
-    try:
-        H.set_patch(*patch)
-        w = H.cell_size(res)
-        assert 0.0 < w < float(EXTENT)
-        # measured bound must not exceed the average-width analytic value
-        avg_w = H._edge_length_m(res) * np.sqrt(3.0) / H.M_PER_UNIT
-        assert w <= avg_w * 1.05
-        rng = np.random.default_rng(100 * res + int(patch[0]))
-        ax = rng.uniform(0, EXTENT, 400)
-        ay = rng.uniform(0, EXTENT, 400)
-        theta = rng.uniform(0, 2 * np.pi, 400)
-        r = rng.uniform(0, w, 400)
-        bx = np.clip(ax + r * np.cos(theta), 0, EXTENT - 1e-9)
-        by = np.clip(ay + r * np.sin(theta), 0, EXTENT - 1e-9)
-        alat, alng = H._to_latlng(ax, ay)
-        blat, blng = H._to_latlng(bx, by)
-        missed = 0
-        for i in range(len(ax)):
-            ca = H._latlng_to_cell(float(alat[i]), float(alng[i]), res)
-            cb = H._latlng_to_cell(float(blat[i]), float(blng[i]), res)
-            if cb not in H._grid_disk(ca, 1):
-                missed += 1
-        assert missed == 0
-    finally:
-        H.set_patch(*old)
 
 
 def test_three_renderers_agree(pts, C):

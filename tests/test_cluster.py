@@ -214,3 +214,51 @@ def test_sort_order_with_partition_col(spark, tmp_path):
     got = _checksum(t.read(where=[("part", "=", "2"), ("x", "<", 2000.0)])
                     .select("pid", "x", "y"))
     assert got == want
+
+
+def test_zorder_query_removes_dead_staging_dirs(spark):
+    """The driver query's staging dir outlives the call (the read is
+    lazy), so each call sweeps same-tag dirs of exited processes: a dir
+    planted for a dead pid is removed, one for a live pid is kept, and
+    the returned rows still equal the DuckDB oracle."""
+    import hashlib
+    import os
+    import shutil
+    import subprocess
+    import sys
+    import tempfile
+
+    import duckdb
+
+    from egp_crn_spark.config import env_sf_dir
+    from egp_crn_spark.driverq5 import (SQL_ZORDER_PRUNED_READ,
+                                        q_zorder_pruned_read)
+
+    # the sf0.001 tables next to the configured scale-factor dir
+    sf = os.path.join(os.path.dirname(env_sf_dir()), "sf0.001")
+    proc = subprocess.Popen([sys.executable, "-c", "pass"])
+    proc.wait()
+    tag = hashlib.md5(sf.encode()).hexdigest()[:8]
+    prefix = f"{tempfile.gettempdir()}/egp_zorder_{tag}_"
+    dead, live = f"{prefix}{proc.pid}", f"{prefix}{os.getppid()}"
+    for d in (dead, live):
+        os.makedirs(d, exist_ok=True)
+        open(os.path.join(d, "_manifest"), "w").close()
+    try:
+        got = q_zorder_pruned_read(spark, sf).toPandas()
+        assert not os.path.exists(dead)
+        assert os.path.exists(live)
+    finally:
+        for d in (dead, live):
+            shutil.rmtree(d, ignore_errors=True)
+    con = duckdb.connect()
+    con.execute(f"create view events as select * from "
+                f"read_parquet('{sf}/events.parquet')")
+    want = con.execute(SQL_ZORDER_PRUNED_READ).df()
+    key = ["event_id", "x", "y"]
+    got = got.sort_values(key).reset_index(drop=True)
+    want = want.sort_values(key).reset_index(drop=True)
+    assert len(got) > 0
+    assert got["event_id"].tolist() == want["event_id"].tolist()
+    assert got["x"].tolist() == want["x"].tolist()
+    assert got["y"].tolist() == want["y"].tolist()

@@ -85,6 +85,18 @@ def test_vector_tiles_max_cover_guard(spark):
         vector_tiles(arcs, res=8, max_cover=100).count()
 
 
+def test_vector_tiles_rejects_short_vertex(spark):
+    """A vertex with one coordinate must raise, naming its arc, instead
+    of reading the next vertex's x as its y."""
+    arcs = spark.createDataFrame(
+        [(1, [[0.0, 0.0], [10.0, 10.0]]),
+         (2, [[5.0], [20.0, 20.0], [30.0, 30.0]]),
+         (3, None)],
+        "arc_id long, vertices array<array<double>>").coalesce(1)
+    with pytest.raises(Exception, match="arc 2 has a vertex with fewer"):
+        vector_tiles(arcs, res=4).count()
+
+
 def _reference_pieces(line, res):
     """The r8 scalar kernel (per-segment assign + clip + stitch), kept
     here as the parity oracle for the r9 vectorized kernel: cell id ->

@@ -1,13 +1,12 @@
 """External-libs conformance runner (VERDICT r7 #8).
 
-Three of the engine's capabilities are twinned against external
-libraries that are absent from the sandbox: the real-H3 cell backend
-(functions/cells_h3.py), pyproj geodesic reprojection (functions/crs.py),
-and the real Iceberg catalog binding (sources/tables.py behind
-``EGP_ICEBERG_CATALOG``). Their in-repo stand-ins execute everywhere
-(Morton + native S2 cells, registered transforms, the snaplog catalog
-emulation), and the import-gated twins carry conformance suites that
-SKIP when the library is missing.
+Two of the engine's capabilities are twinned against optional external
+libraries: the PIL image codec
+(functions/imagecodec.py) and the real Iceberg catalog binding
+(sources/tables.py behind ``EGP_ICEBERG_CATALOG``). Their in-repo
+stand-ins execute everywhere (the deterministic codec, the snaplog
+catalog emulation), and the import-gated twins carry conformance
+suites that SKIP when the library is missing.
 
 This script is the one command a real-cluster run needs to certify the
 gated claims: it probes each external dependency, runs the matching
@@ -60,35 +59,6 @@ def _run_pytest(args: list[str]) -> dict:
         "summary": tail,
         "ok": proc.returncode == 0,
     }
-
-
-def check_h3() -> dict:
-    """Real-H3 backend: the cells_h3 twin + its conformance battery
-    (backend-agnostic axioms run against real h3, plus the measured
-    k-ring-width coverage tests that only execute with the library)."""
-    present = _probe("h3")
-    out = {"dependency": "h3", "present": present}
-    if not present:
-        out["status"] = "absent — cells_s2 native backend is the geodesic default"
-        return out
-    out["pytest"] = _run_pytest(
-        ["tests/test_cells_conformance.py", "tests/test_cells.py"])
-    out["status"] = "ran" if out["pytest"]["ok"] else "FAILED"
-    return out
-
-
-def check_pyproj() -> dict:
-    """Geodesic reprojection: functions/crs.py picks the pyproj
-    transformer automatically when importable; the crs suite's geodesic
-    tier then runs real EPSG transforms instead of registered ones."""
-    present = _probe("pyproj")
-    out = {"dependency": "pyproj", "present": present}
-    if not present:
-        out["status"] = "absent — registered-transform tier only"
-        return out
-    out["pytest"] = _run_pytest(["tests/test_crs.py"])
-    out["status"] = "ran" if out["pytest"]["ok"] else "FAILED"
-    return out
 
 
 def check_pil() -> dict:
@@ -157,7 +127,7 @@ def main() -> int:
     ap.add_argument("--report", default=os.path.join(REPO, "external_report.json"))
     args = ap.parse_args()
 
-    checks = [check_h3(), check_pyproj(), check_pil(), check_iceberg()]
+    checks = [check_pil(), check_iceberg()]
     ran = [c for c in checks if c["present"]]
     failed = [c for c in checks if c.get("status") == "FAILED"]
     report = {
