@@ -243,9 +243,11 @@ def q_distance_join(spark, sf_dir):
         key_x(F.col("event_id")).alias("rx"),
         key_y(F.col("event_id")).alias("ry"),
     )
-    # right side is bounded by the events table (dimension-sized at
-    # driver scales): the broadcast-grid kernel replaces the 9x k-ring
-    # explode + equi-join with one map stage (r9, guide §4.2)
+    # right side is half the events table (50k rows at sf0.1): the
+    # broadcast-grid kernel replaces the 9x k-ring explode + equi-join
+    # with one map stage (r9, guide §4.2). Above sf0.4 it passes
+    # BROADCAST_MAX_ROWS (500k rows at sf1.0) and this query takes the
+    # cell equi-join instead.
     return SJ.distance_join(left, right, _DJ_RADIUS,
                             broadcast_right=True).select("l_id", "r_id")
 

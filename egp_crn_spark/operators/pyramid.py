@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 from ..functions import cells as C
 from ..functions.georef import phash_x, phash_y
 from ..functions.imagecodec import decode_image, resize_nearest
+from . import broadcast as B
 from .cellsets import cell_parent_expr
 
 __all__ = ["base_tiles", "rollup_level", "build_pyramid",
@@ -234,25 +235,18 @@ def pyramid_update(old_pyramid: DataFrame, images: DataFrame,
     cell = C.cell_of_xy(phash_x(F.col("phash")), phash_y(F.col("phash")),
                         res)
     dirty = _p(changed.select(cell.alias("cell")).distinct())
-    # broadcast the dirty set only while it is broadcast-sized — the
-    # live_index tombstone lesson (operators/index_maintain.py): a
-    # metadata-sized set usually, but a churn-everything changelog at a
-    # fine res could exceed the broadcast limit, so fall back to
-    # shuffled semi/anti joins past the threshold (identical results)
-    _DIRTY_BCAST_MAX = 5_000_000
-    n_dirty = dirty.count()  # dirty is cached; reused at every level
-
-    def _hint(df):
-        return F.broadcast(df) if n_dirty <= _DIRTY_BCAST_MAX else df
-
+    # a churn-everything changelog at a fine res can outgrow a broadcast:
+    # one bounded count picks broadcast or shuffle-hash joins for every
+    # level (coarser dirty sets are never larger)
+    small = B.fits_broadcast(dirty)
     level_new = _p(base_tiles(
-        images.join(_hint(dirty.withColumnRenamed("cell", "_dirty")),
+        images.join(B.join_hint(dirty.withColumnRenamed("cell", "_dirty"), small),
                     cell == F.col("_dirty"), "left_semi"),
         res, tile_px))
     def _patched(r, level_new, dirty):
         return _p(old_pyramid.filter(F.col("res") == r)
                   .select("cell", "px", "n_src")
-                  .join(_hint(dirty), "cell", "left_anti")
+                  .join(B.join_hint(dirty, small), "cell", "left_anti")
                   .unionByName(level_new))
 
     cur = _patched(res, level_new, dirty)
@@ -262,7 +256,7 @@ def pyramid_update(old_pyramid: DataFrame, images: DataFrame,
         dirty = _p(dirty.select(
             cell_parent_expr(F.col("cell")).alias("cell")).distinct())
         siblings = cur.join(
-            _hint(dirty),
+            B.join_hint(dirty, small),
             cell_parent_expr(cur["cell"]) == dirty["cell"], "left_semi")
         level_new = _p(rollup_level(siblings, tile_px))
         cur = _patched(r, level_new, dirty)

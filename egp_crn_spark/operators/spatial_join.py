@@ -30,6 +30,7 @@ from pyspark.sql.window import Window
 
 from ..functions import cells as C
 from ..functions import geomkernel as GK
+from . import broadcast as B
 
 
 # ---------------------------------------------------------------------------
@@ -141,7 +142,7 @@ def _grid_distance_kernel(
     right: DataFrame,
     radius: float,
     topk_per_row: int | None = None,
-) -> DataFrame:
+) -> DataFrame | None:
     """Broadcast-grid distance join (guide §4.2, §8): the right side is
     DIMENSION-SIZED (the broadcast_right contract — the reference's
     STRtree held the full right table per process), so instead of
@@ -160,11 +161,18 @@ def _grid_distance_kernel(
 
     ``topk_per_row``: emit only each LEFT ROW's top-k candidates by
     (dist asc, r_id asc) — a superset of any per-l_id global top-k
-    (knn_join pre-reduction; the caller still aggregates/ranks)."""
+    (knn_join pre-reduction; the caller still aggregates/ranks).
+
+    Returns None (the caller takes the cell equi-join) when the right
+    side exceeds BROADCAST_MAX_ROWS or a right cell index has
+    |floor(coord/radius)| >= 2^31: the int64 key ix * 2^32 + iy is
+    exact only inside that domain."""
     from pyspark.sql.types import DoubleType, StructField, StructType
 
     sc = left.sparkSession.sparkContext
-    rpdf = right.toPandas()
+    rpdf = B.collect_small(right)
+    if rpdf is None:
+        return None
     r_fields = right.schema.fields
     rx = rpdf["rx"].to_numpy(dtype=np.float64)
     ry = rpdf["ry"].to_numpy(dtype=np.float64)
@@ -173,9 +181,10 @@ def _grid_distance_kernel(
         rpdf, rx, ry = rpdf.loc[fin], rx[fin], ry[fin]
     s = float(radius)
     _SH = np.int64(1) << np.int64(32)
-    rix = np.floor(rx / s).astype(np.int64)
-    riy = np.floor(ry / s).astype(np.int64)
-    rkey = rix * _SH + riy
+    rix, riy = np.floor(rx / s), np.floor(ry / s)
+    if len(rix) and max(np.abs(rix).max(), np.abs(riy).max()) >= 2.0 ** 31:
+        return None
+    rkey = rix.astype(np.int64) * _SH + riy.astype(np.int64)
     order = np.argsort(rkey, kind="stable")
     rs = rpdf.iloc[order].reset_index(drop=True)
     uniq, starts, counts = np.unique(rkey[order], return_index=True,
@@ -287,10 +296,14 @@ def distance_join(
     broadcast-grid kernel instead of the cell equi-join: the right side
     is collected and grid-bucketed once, the left side streams through
     one mapInPandas stage — zero exchanges, zero explode (r9; see
-    _grid_distance_kernel). Same rows, same float64 dist."""
+    _grid_distance_kernel). Same rows, same float64 dist. A right side
+    over the one broadcast bound (operators/broadcast.py) or outside the
+    kernel's grid-key domain takes the cell equi-join below."""
     if broadcast_right:
-        return _grid_distance_kernel(left, right, radius,
+        grid = _grid_distance_kernel(left, right, radius,
                                      topk_per_row=_topk_per_row)
+        if grid is not None:
+            return grid
     res = res if res is not None else C.res_for_radius(radius)
     lix, liy = C.xy_to_ixy(F.col("lx"), F.col("ly"), res)
     lc = left.withColumn("_cell", F.explode(C.kring_cells(lix, liy, res, 1)))
@@ -319,12 +332,9 @@ def knn_join(
     Ties break on r_id so results are deterministic — the reference's
     first-STRtree-hit selection (helpers.py:160-162,395) is
     insertion-order dependent; we pin it (SURVEY.md §7 hard parts).
-    ``broadcast_right``: hint when the right side is a known-small
-    dimension set (the reference's shape — its STRtree holds the FULL
-    right table per process, helpers.py:155-163, so broadcast is the
-    faithful distribution: the left side never shuffles for the join
-    and only the min_by combine exchanges one row per l_id per map
-    partition; measured 3x on the customer-supplier driver query).
+    ``broadcast_right``: the right side is a dimension set (the
+    reference's STRtree holds the FULL right table per process,
+    helpers.py:155-163): distance_join's bounded broadcast-grid path.
     """
     if not np.isfinite(max_distance):
         raise ValueError("knn_join requires a finite max_distance (cell prefilter bound)")
@@ -403,11 +413,7 @@ def polygon_cover_cells(polys: DataFrame, res: int, convex: bool = False) -> Dat
     )
 
 
-MAX_BROADCAST_POLYS = 200_000  # dimension-sized contract for pip_refine_udf
-
-
-def pip_refine_udf(spark, polys: DataFrame,
-                   max_polys: int = MAX_BROADCAST_POLYS):
+def pip_refine_udf(spark, polys: DataFrame):
     """Scalar pandas UDF (x, y, poly_id) -> bool doing exact PIP against a
     broadcast of the polygon vertex arrays.
 
@@ -416,30 +422,28 @@ def pip_refine_udf(spark, polys: DataFrame,
     mapInPandas design round-tripped whole candidate rows and the Arrow
     exchange of the id strings alone cost more than the geometry.)
 
-    CONTRACT: ``polys`` is dimension-sized (it is collected + broadcast).
-    The bound is ENFORCED, not assumed — a fact-sized polygon set raises
-    instead of silently OOMing the driver; shard such sets (e.g. per
-    tile via groupBy().applyInPandas) before refining. The bound is
-    checked INSIDE the collection loop (no extra count job — the
-    polygon lineage runs exactly once).
+    CONTRACT: ``polys`` is dimension-sized and keyed by a unique
+    ``poly_id``, both ENFORCED in its one bounded collect (operators/
+    broadcast.py): a set over BROADCAST_MAX_ROWS raises instead of
+    OOMing the driver (shard it, e.g. per tile via applyInPandas), and a
+    repeated poly_id raises instead of refining against one ring only.
     """
-    polys_local: dict[int, np.ndarray] = {}
-    for r in polys.select("poly_id", "vertices").toLocalIterator():
-        if len(polys_local) >= max_polys:
-            raise ValueError(
-                f"pip_refine_udf broadcasts the polygon set, but it exceeds "
-                f"max_polys={max_polys}; shard the polygons (per-tile "
-                f"applyInPandas) or raise the bound explicitly"
-            )
-        polys_local[int(r["poly_id"])] = np.asarray(
-            [list(p) for p in r["vertices"]], dtype=np.float64)
+    pdf = B.collect_small(polys.select("poly_id", "vertices"))
+    if pdf is None:
+        raise ValueError(f"pip_refine_udf: the polygon set exceeds "
+                         f"BROADCAST_MAX_ROWS={B.BROADCAST_MAX_ROWS}; shard "
+                         f"it (per-tile applyInPandas)")
+    dup = pdf["poly_id"][pdf["poly_id"].duplicated()]
+    if len(dup):
+        raise ValueError(f"pip_refine_udf needs unique poly_id, but "
+                         f"poly_id {int(dup.iloc[0])} repeats")
     # group polygons by vertex count so the kernel vectorizes across ALL
     # candidate rows of a batch (one gather-indexed ray-cast pass per edge)
-    by_count: dict[int, tuple[dict[int, int], np.ndarray]] = {}
-    for v_count in {len(a) for a in polys_local.values()}:
-        ids = [pid for pid, a in polys_local.items() if len(a) == v_count]
-        stacked = np.stack([polys_local[pid] for pid in ids])
-        by_count[v_count] = ({pid: i for i, pid in enumerate(ids)}, stacked)
+    by_count = {
+        n: ({int(pid): i for i, pid in enumerate(g["poly_id"])},
+            np.stack([np.asarray([list(p) for p in vs], dtype=np.float64)
+                      for vs in g["vertices"]]))
+        for n, g in pdf.groupby(pdf["vertices"].map(len))}
     bc = spark.sparkContext.broadcast(by_count)
 
     @F.pandas_udf("boolean")

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from ..config import CLUSTER_TOLERANCE, MIN_DISTANCE
 from ..functions import geomexpr as GX
 from ..functions import geomkernel as GK
+from . import broadcast as B
 from . import nodes as N
 from .distance import point_near_arc_pairs
 from .spatial_join import rect_intersects_join
@@ -323,14 +324,6 @@ def v301_node_intersection(arcs: DataFrame, id_col: str = "segment_id",
 
 
 # ---------------------------------------------------------------- 302
-# Max deadend rows for which v302 broadcasts the deadend side of its two
-# joins (points into the distance join, endpoints into the connectivity
-# join). 1M rows of (id, node, x, y) is ~40-60 MB serialized — cheap for
-# executors with the usual 4-8 GiB; above it the joins fall back to
-# shuffles. Deadends are a few % of a real road network, so the
-# broadcast path is the production-shaped one.
-DEADEND_BROADCAST_MAX = 1_000_000
-
 # The one persisted intermediate a v302 run leaves behind. Kept so a
 # REPEATED v302 (demo trials, re-validation sweeps) releases the prior
 # run's cached deadend blocks instead of accumulating them in executor
@@ -371,7 +364,9 @@ def v302_min_distance(arcs: DataFrame, min_dist: float = MIN_DISTANCE,
     """Deadend arcs must be >= min_dist from arcs they are not connected
     to (validate_topology.py:174-233): for each deadend node, find arcs
     within min_dist, subtract arcs sharing ANY vertex-node with the
-    deadend arc's endpoints, flag the deadend arc + disconnected arcs."""
+    deadend arc's endpoints, flag the deadend arc + disconnected arcs.
+    Both joins broadcast the deadend side while it fits the one bound
+    (operators/broadcast.py), else shuffle; the flags are the same."""
     # persisted: feeds BOTH the distance join (points) and the dead-arc
     # restriction of the connectivity join below — without the persist
     # the second consumer would re-run the whole deadends lineage
@@ -386,16 +381,13 @@ def v302_min_distance(arcs: DataFrame, min_dist: float = MIN_DISTANCE,
     dead = (N.deadends(arcs, id_col, vertices, packed=True)
             .withColumnRenamed(id_col, "src_id").persist())
     _V302_PERSISTED.append(dead)
-    # bound-enforced broadcast decision (the PIP pattern): deadends are
-    # the validation's subject and a few % of a real network, so both the
-    # distance join's point side and the connectivity join's endpoint
-    # side usually fit a broadcast — then the 100-TB arc side is NEVER
-    # shuffled in either join. The count materializes the persisted
-    # deadends once (work every consumer below needs anyway) and the
-    # worst case (a pathological all-deadend network) falls back to
-    # plain shuffle joins.
-    n_dead = dead.count()
-    small = n_dead <= DEADEND_BROADCAST_MAX
+    # deadends are a few % of a real network, so they usually broadcast
+    # and the 100-TB arc side is NEVER shuffled in either join. The
+    # bounded count also materializes the persisted deadends (work every
+    # consumer below needs anyway). Only the two deadend-side frames of
+    # those joins are hinted: a hint on ``dead`` itself would also ride
+    # its distinct into the dead_ids semi-join and pin that join's plan.
+    small = B.fits_broadcast(dead)
     # p_id = src_id ALONE — the deadend node key is never consumed past
     # this join, so carrying it (a ~20-char string on every k-ring-
     # exploded candidate row) would only widen the join shuffle. The two
@@ -404,9 +396,9 @@ def v302_min_distance(arcs: DataFrame, min_dist: float = MIN_DISTANCE,
     # distinct below collapses pair duplicates anyway (a min-distance
     # aggregation would be a wasted extra shuffle).
     hits = point_near_arc_pairs(
-        dead.select(F.col("src_id").alias("p_id"), "x", "y"),
+        B.join_hint(dead.select(F.col("src_id").alias("p_id"), "x", "y"),
+                    small),
         arcs, min_dist, id_col=id_col, vertices=vertices,
-        broadcast_points=small,
     ).select(F.col("p_id").alias("src_id"), F.col(id_col).alias("near_id"))
     # connected = arcs referencing either endpoint NODE of the source arc
     # (pts_id_lookup over ALL vertices — validate_topology.py:211-215).
@@ -424,14 +416,13 @@ def v302_min_distance(arcs: DataFrame, min_dist: float = MIN_DISTANCE,
     # duplicates only arise from an arc revisiting a node (rare in noded
     # data), and the pre-distinct was a full extra exchange of the widest
     # exploded set — `connected` dedups the (much smaller) join output
-    # anyway. When the deadend count is small (the `small` bound above),
-    # the endpoint side broadcasts and the vertex explode stays entirely
+    # anyway. When the deadend set fits the broadcast bound above, the
+    # endpoint side broadcasts and the vertex explode stays entirely
     # map-side — no vertex row is ever shuffled.
     allv = N.all_vertex_nodes(arcs, id_col, vertices, packed=True).select(
         "node", F.col(id_col).alias("near_id")
     )
-    src_side = F.broadcast(src_end_nodes) if small else src_end_nodes
-    connected = (src_side.join(allv, "node")
+    connected = (B.join_hint(src_end_nodes, small).join(allv, "node")
                  .select("src_id", "near_id").distinct())
     # per-arc SET subtraction (validate_topology.py:219-221): an arc with
     # BOTH endpoints deadends near the same arc yields the pair twice in

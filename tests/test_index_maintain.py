@@ -294,18 +294,23 @@ def test_cell_balance_flags_drift(spark, trained):
     assert skewed["max_over_mean"] > 2 * base["max_over_mean"]
 
 
-def test_tombstone_broadcast_guard_fallback(spark, trained):
+def test_tombstone_broadcast_guard_fallback(spark, trained, monkeypatch):
     """VERDICT r7 #4: an oversized tombstone backlog flips live_index
     from broadcast to a shuffled join automatically — identical results
     both paths — and tombstone_backlog surfaces the compact-me signal."""
+    from egp_crn_spark.operators import broadcast as BC
+
     t, C, B, (s1, s2, s3) = trained
     idx, tombs = IM.build_index_state(t.read(s1), C, s1)
     for frm, to in [(s1, s2), (s2, s3)]:
         idx, tombs = IM.maintain_ivf_index(t, C, frm, to, idx, tombs)
+    forced_bcast = IM.live_index(idx, tombs)
     # plant a backlog larger than a tiny broadcast cap
-    auto_small = IM.live_index(idx, tombs, tombstone_broadcast_max=2)
-    forced_bcast = IM.live_index(idx, tombs, broadcast_tombstones=True)
-    forced_shuffle = IM.live_index(idx, tombs, broadcast_tombstones=False)
+    monkeypatch.setattr(BC, "BROADCAST_MAX_ROWS", 2)
+    auto_small = IM.live_index(idx, tombs)
+    # live_index no longer takes a force flag, so forced_shuffle is now
+    # the same call as auto_small: the patched bound is the only way in
+    forced_shuffle = IM.live_index(idx, tombs)
     want = _index_set(forced_bcast, False)
     assert _index_set(auto_small, False) == want
     assert _index_set(forced_shuffle, False) == want
@@ -315,9 +320,10 @@ def test_tombstone_broadcast_guard_fallback(spark, trained):
     assert "BroadcastHashJoin" not in p, p[:1200]
     p2 = plans.physical_plan(forced_bcast)
     assert "BroadcastHashJoin" in p2
-    back = IM.tombstone_backlog(tombs, broadcast_max=2)
+    back = IM.tombstone_backlog(tombs)
     assert back["ids"] > 2 and back["over_broadcast"]
+    monkeypatch.undo()
     assert not IM.tombstone_backlog(tombs)["over_broadcast"]
     # compaction clears the pressure
     cidx, ctombs = IM.compact_index(idx, tombs)
-    assert IM.tombstone_backlog(ctombs, broadcast_max=2)["ids"] == 0
+    assert IM.tombstone_backlog(ctombs)["ids"] == 0

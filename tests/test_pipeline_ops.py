@@ -456,7 +456,7 @@ def test_simhash_md5_matches_xxhash_structure(spark):
     assert (got.hamming <= 10).all()
 
 
-def test_v302_small_deadend_broadcast_path(spark):
+def test_v302_small_deadend_broadcast_path(spark, monkeypatch):
     """The bound-enforced v302 broadcast decision: with few deadends the
     distance join's point side and the connectivity join's endpoint side
     BROADCAST (the arc side is never shuffled); with the bound forced to
@@ -464,6 +464,7 @@ def test_v302_small_deadend_broadcast_path(spark):
     the same arcs."""
     import pandas as pd
 
+    from egp_crn_spark.operators import broadcast as B
     from egp_crn_spark.operators import validate as V
     from egp_crn_spark import plans
 
@@ -479,12 +480,8 @@ def test_v302_small_deadend_broadcast_path(spark):
     assert plans.has_broadcast_join(df_b), "small deadend set must broadcast"
     got_b = sorted(r.flagged_id for r in df_b.collect())
 
-    orig = V.DEADEND_BROADCAST_MAX
-    try:
-        V.DEADEND_BROADCAST_MAX = 0
-        got_s = sorted(r.flagged_id for r in V.v302_min_distance(net).collect())
-    finally:
-        V.DEADEND_BROADCAST_MAX = orig
+    monkeypatch.setattr(B, "BROADCAST_MAX_ROWS", 0)
+    got_s = sorted(r.flagged_id for r in V.v302_min_distance(net).collect())
     assert got_b == got_s == ["road", "stub"]
 
 

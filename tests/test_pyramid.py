@@ -82,12 +82,9 @@ def test_count_conservation(spark, images):
     assert all(r.n == total for r in per_level)
 
 
-def test_pyramid_update_equals_rebuild(spark, images):
-    """Incremental maintenance == full rebuild, byte-equal at every
-    level, across inserts + deletes (including cells emptied by the
-    delete of their last image)."""
-    from egp_crn_spark.operators.pyramid import pyramid_update
-
+def _vintages(images):
+    """(v1, v2, changed): v2 = v1 plus inserts minus deletes, and the
+    changelog between them."""
     h = F.abs(F.xxhash64("image_id", F.lit(11)))
     v1 = images.filter(h % 3 != 0)
     inserts = images.filter(h % 3 == 0)
@@ -97,7 +94,16 @@ def test_pyramid_update_equals_rebuild(spark, images):
     changed = (inserts.withColumn("_change_type", F.lit("insert"))
                .unionByName(deletes.withColumn("_change_type",
                                                F.lit("delete"))))
+    return v1, v2, changed
 
+
+def test_pyramid_update_equals_rebuild(spark, images):
+    """Incremental maintenance == full rebuild, byte-equal at every
+    level, across inserts + deletes (including cells emptied by the
+    delete of their last image)."""
+    from egp_crn_spark.operators.pyramid import pyramid_update
+
+    v1, v2, changed = _vintages(images)
     old = build_pyramid(v1, RES, MIN_RES, PX)
     got = pyramid_update(old, v2, changed, RES, MIN_RES, PX).toPandas()
     want = build_pyramid(v2, RES, MIN_RES, PX).toPandas()
@@ -121,6 +127,37 @@ def test_pyramid_update_equals_rebuild(spark, images):
     for _, r in delta.iterrows():
         assert wm[(int(r["res"]), int(r["cell"]))] == (bytes(r["px"]),
                                                        int(r["n_src"]))
+
+
+def test_pyramid_update_dirty_set_over_bound_shuffles(spark, images,
+                                                     monkeypatch):
+    """A dirty-cell set over the one broadcast bound takes shuffle joins
+    at every level: no BroadcastHashJoin, and the same tiles as the
+    broadcast path."""
+    from egp_crn_spark import plans
+    from egp_crn_spark.operators import broadcast as B
+    from egp_crn_spark.operators.pyramid import pyramid_update
+
+    v1, v2, changed = _vintages(images)
+    # checkpointed, so the only joins in the plans are pyramid_update's
+    v2, changed = v2.localCheckpoint(), changed.localCheckpoint()
+    old = build_pyramid(v1, RES, MIN_RES, PX)
+
+    def tiles(df):
+        return {(int(r["res"]), int(r["cell"])): (bytes(r["px"]),
+                                                  int(r["n_src"]))
+                for _, r in df.toPandas().iterrows()}
+
+    bcast = pyramid_update(old, v2, changed, RES, MIN_RES, PX)
+    assert plans.has_broadcast_join(bcast)
+    want = tiles(bcast)
+    # a cache lookup ignores join hints: drop the broadcast run's cached
+    # levels so the second run plans its own joins
+    spark.catalog.clearCache()
+    monkeypatch.setattr(B, "BROADCAST_MAX_ROWS", 1)
+    shuffled = pyramid_update(old, v2, changed, RES, MIN_RES, PX)
+    assert "BroadcastHashJoin" not in plans.physical_plan(shuffled)
+    assert tiles(shuffled) == want
 
 
 def test_pyramid_maintained_across_catalog_vintages(spark, images,

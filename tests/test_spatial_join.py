@@ -215,3 +215,94 @@ def test_grid_kernel_null_coords_and_empty_right(spark, rng):
         ldf, spark.createDataFrame(right).filter(F.col("r_id") < 0),
         1000.0, broadcast_right=True)
     assert empty.count() == 0
+
+
+def test_grid_kernel_over_bound_takes_cell_join(spark, monkeypatch):
+    """A right side over the one broadcast bound takes the cell equi-join
+    for distance_join and knn_join with broadcast_right=True: the same
+    rows as the grid kernel, and no grid mapInPandas in the plan."""
+    from egp_crn_spark.operators import broadcast as B
+
+    rng = np.random.default_rng(21)
+    ldf = spark.createDataFrame(_points(rng, 150, "l_id", "lx", "ly"))
+    rdf = spark.createDataFrame(_points(rng, 200, "r_id", "rx", "ry"))
+
+    def runs():
+        dj = SJ.distance_join(ldf, rdf, 3000.0, broadcast_right=True)
+        knn = [SJ.knn_join(ldf, rdf, k=k, max_distance=2500.0,
+                           broadcast_right=True) for k in (1, 3)]
+        return [dj] + knn
+
+    def rows(df):
+        key = "knn_rank" if "knn_rank" in df.columns else "r_id"
+        return (df.toPandas().sort_values(["l_id", key])
+                .reset_index(drop=True))
+
+    grid = runs()
+    assert all("MapInPandas" in plans.physical_plan(df) for df in grid)
+    monkeypatch.setattr(B, "BROADCAST_MAX_ROWS", 199)
+    joined = runs()
+    for g, j in zip(grid, joined):
+        plans.assert_pure_jvm(j)
+        a, b = rows(g), rows(j)
+        assert a.columns.tolist() == b.columns.tolist()
+        assert len(a) == len(b) > 0
+        for c in a.columns:
+            assert (a[c].values == b[c].values).all(), c
+
+
+def test_grid_kernel_key_domain_bound(spark):
+    """A right cell index |floor(coord/radius)| >= 2^31 is outside the
+    grid key's exact range: the join takes the cell equi-join and still
+    returns exactly the brute-force pairs."""
+    left = pd.DataFrame({"l_id": [1, 2, 3, 4],
+                         "lx": [1e12 + 0.25, 100.5, 1e12 + 3.0, 1e12 - 0.5],
+                         "ly": [5.25, 100.0, 5.0, 5.0]})
+    right = pd.DataFrame({"r_id": [1, 2, 3],
+                          "rx": [1e12, 100.0, 1e12 + 0.5],
+                          "ry": [5.0, 100.0, 5.0]})
+    df = SJ.distance_join(spark.createDataFrame(left),
+                          spark.createDataFrame(right), 1.0,
+                          broadcast_right=True)
+    assert "MapInPandas" not in plans.physical_plan(df)
+    got = (df.select("l_id", "r_id", "dist").toPandas()
+           .sort_values(["l_id", "r_id"]).reset_index(drop=True))
+    dx = left.lx.values[:, None] - right.rx.values[None, :]
+    dy = left.ly.values[:, None] - right.ry.values[None, :]
+    d = np.sqrt(dx * dx + dy * dy)
+    li, ri = np.nonzero(d <= 1.0)
+    assert list(zip(got.l_id, got.r_id)) == list(
+        zip(left.l_id.values[li], right.r_id.values[ri]))
+    assert (got.dist.values == d[li, ri]).all()
+
+
+def _square(pid, x0, y0, size):
+    return {"poly_id": pid,
+            "vertices": [[x0, y0], [x0 + size, y0], [x0 + size, y0 + size],
+                         [x0, y0 + size], [x0, y0]]}
+
+
+def test_point_in_polygon_rejects_duplicate_poly_id(spark):
+    """Two rings under one poly_id would refine every point against one
+    ring only: the collect raises, naming the id."""
+    polys = spark.createDataFrame(pd.DataFrame(
+        [_square(7, 1000.0, 1000.0, 500.0), _square(7, 5000.0, 5000.0, 500.0),
+         _square(8, 9000.0, 9000.0, 500.0)]))
+    pts = spark.createDataFrame(pd.DataFrame(
+        {"p_id": [1, 2], "x": [1200.0, 5200.0], "y": [1200.0, 5200.0]}))
+    with pytest.raises(ValueError, match="poly_id 7 repeats"):
+        SJ.point_in_polygon_join(pts, polys, res=6, convex=False)
+
+
+def test_point_in_polygon_over_bound_raises(spark, monkeypatch):
+    """A polygon set over the one broadcast bound has no same-rows
+    fallback: the refine raises an error naming the bound."""
+    from egp_crn_spark.operators import broadcast as B
+
+    polys = spark.createDataFrame(pd.DataFrame(
+        [_square(i, 1000.0 * i, 1000.0, 500.0) for i in range(1, 4)]))
+    pts = spark.createDataFrame(pd.DataFrame(
+        {"p_id": [1], "x": [1200.0], "y": [1200.0]}))
+    monkeypatch.setattr(B, "BROADCAST_MAX_ROWS", 2)
+    with pytest.raises(ValueError, match="BROADCAST_MAX_ROWS=2"):
+        SJ.point_in_polygon_join(pts, polys, res=6)
